@@ -26,6 +26,7 @@ import re
 import shutil
 import threading
 import time
+import types
 import uuid
 from collections.abc import Iterable
 
@@ -55,6 +56,9 @@ SYSTEM_COLS = frozenset({TIMESTAMP_COL})
 # docs/adr/011-apache-arrow-integration.md:113)
 ARROW_MIME = "application/vnd.apache.arrow.stream"
 
+# read size of the backwards operations-log tail read
+_OPS_TAIL_BLOCK = 64 * 1024
+
 
 def df_to_arrow_ipc(df: DataFrame) -> tuple[bytes, str, int]:
     """Serialize a (bounded!) DataFrame to an Arrow IPC stream via Spark's
@@ -72,6 +76,53 @@ def df_to_arrow_ipc(df: DataFrame) -> tuple[bytes, str, int]:
     return sink.getvalue().to_pybytes(), str(tbl.schema), tbl.num_rows
 
 
+class _ViewLayer:
+    """One cached layer of SQL temp views: project tables or workspace
+    objects. Temp views live in ONE namespace per SparkSession, shared by
+    every engine and thread on it, so a layer holds only its most recent
+    registrant: the key, the catalog generation the set was built at, and
+    the names it defined."""
+
+    def __init__(self) -> None:
+        self.key = None
+        self.gen = None
+        self.names: list[str] = []
+
+    def refresh(self, spark: SparkSession, key, gen: int, build,
+                keep: frozenset = frozenset()) -> bool:
+        """Make ``key`` at ``gen`` the registered set unless it already is.
+        ``build()`` yields (name, DataFrame) pairs; a name the previous
+        registrant defined and the new set does not is dropped, unless
+        another layer owns it (``keep``). A failing ``build`` leaves both
+        the namespace and this layer as they were. Returns whether the set
+        was rebuilt."""
+        if self.key == key and self.gen == gen:
+            return False
+        views = dict(build())
+        for name, df in views.items():
+            df.createOrReplaceTempView(name)
+        for name in set(self.names) - views.keys() - keep:
+            spark.catalog.dropTempView(name)
+        self.key, self.gen, self.names = key, gen, list(views)
+        return True
+
+
+_VIEWS_ATTACH_LOCK = threading.Lock()
+
+
+def _view_namespace(spark: SparkSession):
+    """The view layers of ``spark``'s temp-view namespace, with the lock
+    that makes registration + analysis atomic across threads and
+    engines."""
+    with _VIEWS_ATTACH_LOCK:
+        ns = getattr(spark, "_storage_views", None)
+        if ns is None:
+            ns = spark._storage_views = types.SimpleNamespace(
+                lock=threading.RLock(), project=_ViewLayer(),
+                workspace=_ViewLayer())
+    return ns
+
+
 class StorageEngine:
     def __init__(self, spark: SparkSession, warehouse: str) -> None:
         self.spark = spark
@@ -82,8 +133,10 @@ class StorageEngine:
         # monotone catalog generation: bumped by every logged operation
         # (all mutations log) — view-registration caching keys off it
         self._generation = 0
-        self._views_cache: dict[tuple[str, str | None], int] = {}
-        self._views_names: dict[tuple[str, str | None], list[str]] = {}
+        self._views = _view_namespace(spark)
+        # view-layer keys carry this token: generations of two engines on
+        # one session are not comparable
+        self._views_owner = object()
 
     @property
     def files(self):
@@ -103,7 +156,7 @@ class StorageEngine:
         rec = {"op": op, "ts": time.time(), **detail}
         with self._ops_lock, open(self._ops_log_path, "a") as f:
             f.write(json.dumps(rec) + "\n")
-        self._generation += 1
+            self._generation += 1
 
     # -------------------------------------------------- projects / buckets
     def create_project(self, project: str) -> None:
@@ -1175,11 +1228,27 @@ class StorageEngine:
 
     # ------------------------------------------------- service-parity ops
     def operations_log(self, limit: int = 100) -> list[dict]:
-        """Tail of the operations log (reference operations_log table)."""
-        if not os.path.exists(self._ops_log_path):
+        """Tail of the operations log (reference operations_log table):
+        the last ``limit`` records, read backwards from the end of the
+        file one block at a time, so the cost follows ``limit`` and not
+        the length of the (unbounded) log."""
+        if limit <= 0 or not os.path.exists(self._ops_log_path):
             return []
-        with open(self._ops_log_path) as f:
-            lines = f.readlines()
+        with self._ops_lock, open(self._ops_log_path, "rb") as f:
+            pos = f.seek(0, os.SEEK_END)
+            blocks, newlines = [], 0
+            # limit + 1 newlines: everything after the first one is whole
+            while pos > 0 and newlines <= limit:
+                step = min(_OPS_TAIL_BLOCK, pos)
+                pos -= step
+                f.seek(pos)
+                blocks.append(f.read(step))
+                newlines += blocks[-1].count(b"\n")
+        lines = b"".join(reversed(blocks)).split(b"\n")
+        if pos > 0:
+            lines = lines[1:]              # starts mid-record
+        if lines and not lines[-1]:
+            lines.pop()                    # the final record's newline
         return [json.loads(x) for x in lines[-limit:]]
 
     def create_api_key(self, name: str) -> str:
@@ -3018,61 +3087,94 @@ class StorageEngine:
         """ATTACH-equivalent: every project table becomes a temp view named
         '{bucket}_{table}' (reference src/pgwire_server.py:107-152).
 
-        Registration is CACHED per (project, branch) against the engine's
-        catalog generation (bumped by every logged operation, mutations
-        included): a PG-wire session or query burst re-registers nothing
+        Registration is CACHED against the engine's catalog generation
+        (bumped by every logged operation, mutations included) while
+        (project, branch) is the most recent project registrant on the
+        session: a PG-wire session or query burst re-registers nothing
         until something in the warehouse actually changed — listing
         buckets + rebuilding every table's scan plan costs ~200 ms per
         table otherwise. A cache hit returns the SAME view-name list as a
-        fresh registration (the documented public contract). Single-writer
-        assumption: the generation counter is per-engine-instance, so
-        mutations made by ANOTHER process over the same warehouse do not
-        invalidate this cache — run one engine per warehouse (the same
-        assumption the table lock manager makes)."""
-        key = (project, branch)
-        gen = self._generation
-        # views share ONE temp-view namespace: a different project/branch
-        # registering since would have overwritten colliding names, so
-        # the cache only holds for the most recent registrant
-        if (getattr(self, "_last_views_key", None) == key
-                and self._views_cache.get(key) == gen):
-            return self._views_names.get(key, [])
-        self._last_views_key = key
-        views = []
-        for bucket in self.catalog.list_buckets(project):
-            for table in self.list_linked_tables(project, bucket):
-                name = f"{bucket}_{table}"
-                self.read_table(project, bucket, table, branch) \
-                    .createOrReplaceTempView(name)
-                views.append(name)
-        self._views_cache[key] = gen
-        self._views_names[key] = views
-        return views
+        fresh registration (the documented public contract). A switch to
+        another project or branch drops the previous registrant's views
+        that the new one does not define, so one project never resolves
+        another's tables. Single-writer assumption: the generation counter
+        is per-engine-instance, so mutations made by ANOTHER process over
+        the same warehouse do not invalidate this cache — run one engine
+        per warehouse (the same assumption the table lock manager
+        makes)."""
+        ns = self._views
+        with ns.lock:
+            # read before listing: a mutation racing this registration
+            # bumps past it, so the next call misses instead of reusing
+            gen = self._generation
+
+            def build():
+                for bucket in self.catalog.list_buckets(project):
+                    for table in self.list_linked_tables(project, bucket):
+                        yield f"{bucket}_{table}", self.read_table(
+                            project, bucket, table, branch)
+
+            if ns.project.refresh(self.spark,
+                                  (self._views_owner, project, branch),
+                                  gen, build):
+                # the workspace layer skips project names: its set is stale
+                ns.workspace.gen = None
+            return list(ns.project.names)
 
     def register_workspace_views(self, workspace: str) -> list[str]:
         """Workspace-local objects as temp views by BARE name — the
         reference's workspace SQL runs inside the workspace DuckDB
         database, so tables created there (CTAS loads, COPY FROM STDIN)
         resolve unqualified (src/pgwire_server.py:107-152 attaches the
-        project as schemas ON TOP of the workspace db). Registered before
-        project views, so a name collision resolves to the PROJECT table
-        (the read contract wins). Not cached: workspace objects mutate
-        outside the catalog generation counter and a workspace holds few
-        objects."""
-        d = self.catalog.workspace_dir(workspace)
-        views = []
-        if not os.path.isdir(d):
-            return views
-        for name in sorted(os.listdir(d)):
-            p = os.path.join(d, name)
-            if name.startswith("_") or not os.path.isdir(p):
-                continue
-            try:
-                self.spark.read.parquet(p).createOrReplaceTempView(name)
-            except Exception:
-                continue  # half-written / non-table dir: skip, don't fail auth'd SQL
-            views.append(name)
-        return views
+        project as schemas ON TOP of the workspace db). A name the
+        registered project views define is skipped, so a collision
+        resolves to the PROJECT table (the read contract wins).
+
+        Cached like :meth:`register_project_views`: reused while the
+        catalog generation is unchanged and this workspace is the most
+        recent workspace registrant. Every workspace mutation (create,
+        drop, clear, object drop, table load, password reset, PG-wire
+        COPY FROM STDIN) logs and so bumps the generation, and a
+        project-layer rebuild invalidates this layer too. A switch to
+        another workspace drops the previous one's views."""
+        ns = self._views
+        with ns.lock:
+            gen = self._generation     # before listing, as for projects
+            taken = frozenset(ns.project.names)
+
+            def build():
+                d = self.catalog.workspace_dir(workspace)
+                if not os.path.isdir(d):
+                    return
+                for name in sorted(os.listdir(d)):
+                    p = os.path.join(d, name)
+                    if name.startswith("_") or name in taken \
+                            or not os.path.isdir(p):
+                        continue
+                    try:
+                        df = self.spark.read.parquet(p)
+                    except Exception:
+                        # half-written / non-table dir: skip, don't fail
+                        # auth'd SQL
+                        continue
+                    yield name, df
+
+            ns.workspace.refresh(self.spark, (self._views_owner, workspace),
+                                 gen, build, keep=taken)
+            return list(ns.workspace.names)
+
+    def _sql(self, project: str, sql: str, branch: str | None,
+             workspace: str | None = None) -> DataFrame:
+        """``spark.sql`` against the project's (and workspace's) views.
+        One lock spans registration and analysis, which binds the views
+        into the plan, so a concurrent statement on another project or
+        workspace (PG-wire is thread-per-connection) cannot swap them in
+        between; execution runs outside it."""
+        with self._views.lock:
+            self.register_project_views(project, branch)
+            if workspace:
+                self.register_workspace_views(workspace)
+            return self.spark.sql(sql)
 
     def execute_query_arrow(self, project: str, sql: str,
                             branch: str | None = None,
@@ -3086,7 +3188,6 @@ class StorageEngine:
         Arrow batches (``df.toArrow()``) and is returned as an IPC stream
         — no Python row marshaling, no JSON. Returns
         (ipc_bytes, schema_string, row_count)."""
-        self.register_project_views(project, branch)
         sc = self.spark.sparkContext
         group = f"exec-{uuid.uuid4().hex[:8]}"
         sc.setJobGroup(group, sql[:100], interruptOnCancel=True)
@@ -3096,7 +3197,7 @@ class StorageEngine:
                                     lambda: sc.cancelJobGroup(group))
             timer.start()
         try:
-            df = self.spark.sql(sql)
+            df = self._sql(project, sql, branch)
             if max_rows is not None:
                 tbl = df.limit(max_rows + 1).toArrow()
                 if tbl.num_rows > max_rows:
@@ -3132,9 +3233,6 @@ class StorageEngine:
         ``max_rows=None`` to explicitly opt into an unbounded collect.
         ``workspace`` additionally registers that workspace's local objects
         as bare-name views (the PG-wire session contract)."""
-        if workspace:
-            self.register_workspace_views(workspace)
-        self.register_project_views(project, branch)
         sc = self.spark.sparkContext
         group = f"exec-{uuid.uuid4().hex[:8]}"
         sc.setJobGroup(group, sql[:100], interruptOnCancel=True)
@@ -3144,7 +3242,7 @@ class StorageEngine:
                                     lambda: sc.cancelJobGroup(group))
             timer.start()
         try:
-            df = self.spark.sql(sql)
+            df = self._sql(project, sql, branch, workspace)
             if max_rows is not None:
                 # limit(n+1) so truncation is detectable without a count
                 rows = df.limit(max_rows + 1).collect()

@@ -2,9 +2,13 @@
 (SURVEY §5: data-pipeline roundtrips, dedup modes, snapshot recovery, branch
 CoW, bucket sharing, workspace SQL)."""
 
+import json
 import os
+import sys
+import threading
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from keboola_storage_duckdb_spark.catalog.catalog import (
@@ -542,3 +546,153 @@ def test_snapshot_diff_pk_and_rowset(engine, tmp_path):
         == ("rowset", 2, 2, 1)
     engine.drop_table("p1", "in_c_data", "diff_t")
     engine.drop_table("p1", "in_c_data", "diff_np")
+
+
+# ------------------------------------------------- SQL view namespace rules
+
+def _id_table(eng, tmp_path, project, bucket, table, n):
+    """Table ``project.bucket.table`` holding ids 1..n."""
+    eng.create_table(project, bucket, table,
+                     [{"name": "id", "type": "INTEGER", "nullable": False}])
+    path = tmp_path / f"{project}_{bucket}_{table}.csv"
+    path.write_text("id\n" + "".join(f"{i}\n" for i in range(1, n + 1)))
+    eng.import_file(project, bucket, table, str(path), file_format="csv")
+
+
+@pytest.fixture
+def two_projects(spark, tmp_path):
+    """Fresh engine: p1 has in_c_b_secret (3 rows) and in_c_b_t (2 rows),
+    p2 has in_c_b_t (5 rows); workspace w1 holds obj (p1's secret)."""
+    eng = StorageEngine(spark, str(tmp_path / "wh"))
+    for p in ("p1", "p2"):
+        eng.create_project(p)
+        eng.create_bucket(p, "in_c_b")
+    _id_table(eng, tmp_path, "p1", "in_c_b", "secret", 3)
+    _id_table(eng, tmp_path, "p1", "in_c_b", "t", 2)
+    _id_table(eng, tmp_path, "p2", "in_c_b", "t", 5)
+    eng.create_workspace("w1")
+    eng.create_workspace("w2")
+    eng.load_table_to_workspace("w1", "p1", "in_c_b", "secret", "obj")
+    return eng
+
+
+def _count(eng, project, name, workspace=None):
+    return eng.execute_query(project, f"SELECT COUNT(*) AS n FROM {name}",
+                             workspace=workspace)[0]["n"]
+
+
+def test_project_switch_evicts_previous_project_views(two_projects):
+    """A project only resolves its own tables: p1's views are dropped
+    when p2 registers, so p2 cannot read p1's in_c_b_secret."""
+    eng = two_projects
+    assert _count(eng, "p1", "in_c_b_secret") == 3
+    with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
+        _count(eng, "p2", "in_c_b_secret")
+    assert _count(eng, "p2", "in_c_b_t") == 5
+    assert _count(eng, "p1", "in_c_b_t") == 2
+
+
+def test_workspace_switch_evicts_previous_workspace_views(two_projects):
+    eng = two_projects
+    assert _count(eng, "p1", "obj", workspace="w1") == 3
+    with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
+        _count(eng, "p1", "obj", workspace="w2")
+    assert _count(eng, "p1", "obj", workspace="w1") == 3
+
+
+def test_dropped_workspace_object_is_not_found(two_projects):
+    """After the object's files are gone the next statement fails at
+    analysis (not found), not at run time with FAILED_READ_FILE."""
+    eng = two_projects
+    assert _count(eng, "p1", "obj", workspace="w1") == 3
+    eng.drop_workspace_object("w1", "obj")
+    with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
+        _count(eng, "p1", "obj", workspace="w1")
+
+
+def test_project_table_wins_over_workspace_object(two_projects):
+    """A workspace object named like a project view resolves to the
+    project table, and to the object under a project without that
+    table — across project switches in both directions."""
+    eng = two_projects
+    eng.load_table_to_workspace("w1", "p2", "in_c_b", "t", "in_c_b_secret")
+    assert _count(eng, "p1", "in_c_b_secret", workspace="w1") == 3
+    assert _count(eng, "p2", "in_c_b_secret", workspace="w1") == 5
+    assert _count(eng, "p1", "in_c_b_secret", workspace="w1") == 3
+    assert "in_c_b_secret" not in eng.register_workspace_views("w1")
+
+
+def test_concurrent_queries_resolve_their_own_project(two_projects):
+    """Registration and analysis are atomic: threads on two projects
+    whose in_c_b_t differ (more threads than cores, fast thread
+    switching) never see each other's table."""
+    eng = two_projects
+    want = {"p1": 2, "p2": 5}
+    projects = [p for _ in range((os.cpu_count() or 2) // 2 + 1)
+                for p in want]
+    seen = [[] for _ in projects]
+    errors = []
+    start = threading.Barrier(len(projects))
+
+    def run(i):
+        try:
+            start.wait()
+            for _ in range(50):
+                seen[i].append(_count(eng, projects[i], "in_c_b_t"))
+        except Exception as e:           # surfaced by the assert below
+            errors.append(e)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=run, args=(i,))
+                   for i in range(len(projects))]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    for p, got in zip(projects, seen):
+        assert got == [want[p]] * 50, (p, got)
+
+
+def test_engines_sharing_a_session_resolve_their_own_tables(spark,
+                                                            tmp_path):
+    """Temp views are per Spark session, not per engine: two engines
+    over different warehouses on one session, each with p1.in_c_b.t,
+    never serve each other's table from a cache hit."""
+    engines = {}
+    for n in (2, 4):
+        eng = StorageEngine(spark, str(tmp_path / f"wh{n}"))
+        eng.create_project("p1")
+        eng.create_bucket("p1", "in_c_b")
+        _id_table(eng, tmp_path, "p1", "in_c_b", "t", n)
+        engines[n] = eng
+    for _ in range(2):
+        for n, eng in engines.items():
+            assert _count(eng, "p1", "in_c_b_t") == n
+
+
+def test_operations_log_tail_matches_full_read(spark, tmp_path, monkeypatch):
+    """The backwards tail read returns exactly what reading every line
+    and slicing the tail returned, on a log several read blocks long
+    with records longer than a block."""
+    from keboola_storage_duckdb_spark import engine as engine_mod
+
+    eng = StorageEngine(spark, str(tmp_path / "whl"))
+    monkeypatch.setattr(engine_mod, "_OPS_TAIL_BLOCK", 256)
+    with open(eng._ops_log_path, "a") as f:
+        for i in range(300):
+            f.write(json.dumps({"op": "x", "i": i,
+                                "pad": "p" * (i % 7 * 97)}) + "\n")
+    with open(eng._ops_log_path) as f:
+        lines = f.readlines()
+    assert os.path.getsize(eng._ops_log_path) > 20 * 256
+    for limit in (1, 2, 3, 17, 100, len(lines) - 1, len(lines),
+                  len(lines) + 5):
+        assert eng.operations_log(limit) == \
+            [json.loads(x) for x in lines[-limit:]], limit
+    assert eng.operations_log(0) == []

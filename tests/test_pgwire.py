@@ -4,12 +4,14 @@ the server end-to-end: auth success/failure, project views queryable under
 {bucket}_{table} names, NULL handling, error recovery within a session,
 connection limit, session registry."""
 
+import json
 import socket
 import struct
 
 import pytest
 
 from keboola_storage_duckdb_spark.engine import StorageEngine
+from keboola_storage_duckdb_spark.service.app import create_app
 from keboola_storage_duckdb_spark.service.pgwire import PgWireServer
 
 USERS_COLUMNS = [
@@ -1016,4 +1018,56 @@ def test_copy_delimiter_and_null_options(server):
     # multi-char delimiter rejected
     _h, _d, _t, err = c.copy_out("COPY dopt TO STDOUT DELIMITER 'ab'")
     assert err is not None and err["C"] == "0A000"
+    c.terminate()
+
+
+def test_workspace_mutations_reach_the_next_statement(server):
+    """Workspace views are cached on the catalog generation: every
+    workspace mutation path — REST load, driver load, COPY FROM STDIN
+    (new object and append), driver object drop, REST clear — must be
+    visible to the very next PG-wire statement of a warm session."""
+    srv, _pw, eng = server
+    eng.create_workspace("ws_inv")
+    c = MiniPgClient(srv.port, "ws_inv", "p5",
+                     eng.reset_workspace_password("ws_inv"))
+    assert c.auth_error is None
+    rest = create_app(eng).test_client()
+
+    def driver(command):
+        r = rest.post("/driver/execute", data=json.dumps({"command": command}),
+                      content_type="application/json")
+        assert r.status_code == 200, r.get_json()
+
+    def count(name):
+        _cols, rows, err = c.query(f"SELECT COUNT(*) AS n FROM {name}")
+        if err is not None:
+            assert "TABLE_OR_VIEW_NOT_FOUND" in err["M"], err
+            return None
+        return int(rows[0][0])
+
+    assert count("a") is None                  # warm: empty workspace
+    r = rest.post("/projects/p5/workspaces/ws_inv/load",
+                  json={"bucket": "in_c_data", "table": "users",
+                        "destination": "a"})
+    assert r.status_code == 200, r.get_json()
+    assert count("a") == 3
+    driver({"type": "LoadTableToWorkspaceCommand", "workspaceId": "ws_inv",
+            "projectId": "p5", "bucketName": "in_c_data",
+            "tableName": "users", "destinationName": "b",
+            "where": "id > 1"})
+    assert count("b") == 2
+    _h, tag, err = c.copy_in("COPY c_new (s) FROM STDIN", b"x\ny\n")
+    assert err is None and tag == "COPY 2"
+    assert count("c_new") == 2
+    _h, tag, err = c.copy_in("COPY a (id, name) FROM STDIN", b"9\tZed\n")
+    assert err is None and tag == "COPY 1"
+    assert count("a") == 4
+    driver({"type": "DropWorkspaceObjectCommand", "workspaceId": "ws_inv",
+            "objectName": "b"})
+    assert count("b") is None
+    assert count("a") == 4
+    assert rest.post("/projects/p5/workspaces/ws_inv/clear").status_code \
+        == 200
+    assert count("a") is None
+    assert count("c_new") is None
     c.terminate()

@@ -115,12 +115,29 @@ def test_pack_sequences_never_single_partition(spark, sf_dir):
     """The packing exclusive scan must stay partition-parallel: no
     SinglePartition exchange (the naive global-window cumsum plans
     `Exchange SinglePartition` — the classic 100 TB scale-killer) and
-    the window must be keyed by the partition id."""
-    df = E.q_pack_sequences(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "SinglePartition" not in plan, plan
-    assert "windowspecdefinition(pid" in plan.lower().replace(" ", "") \
-        or "pid" in plan, plan
+    the window must be keyed by the partition id. Pinned on the
+    distributed form (driver route disabled); the bounded driver route
+    is a LocalTableScan, taken only when the input fits its bound."""
+    from keboola_storage_duckdb_spark.functions.packing import (
+        pack_token_stream)
+
+    docs = E._t(spark, sf_dir, "documents")
+
+    def plan(driver_row_limit):
+        df = pack_token_stream(docs, "doc_id", "text", max_len=2048,
+                               driver_row_limit=driver_row_limit)
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    distributed = plan(0)
+    assert "SinglePartition" not in distributed, distributed
+    assert "windowspecdefinition(pid" in \
+        distributed.lower().replace(" ", ""), distributed
+    n = docs.count()
+    over = plan(n - 1)                 # one row past the bound
+    assert "LocalTableScan" not in over, over
+    assert "windowspecdefinition(pid" in over.lower().replace(" ", ""), over
+    under = plan(n)
+    assert under.startswith("LocalTableScan"), under
 
 
 def test_range_join_is_hash_join_not_nested_loop(spark, sf_dir):
